@@ -101,24 +101,6 @@ def _tags_agg():
         F.when(F.col("k").isNotNull(), F.struct("k", "v")))))
 
 
-def decode_node_locations(spans: DataFrame) -> DataFrame:
-    """(lon, lat, quadtree) ONLY — the minimal projection for
-    consumers that need node cells but no tags/info (e.g. the tile
-    dictionary): skips the tag groupBy+join entirely, so a dictionary
-    pass costs one filtered span parse instead of a full
-    decode_nodes."""
-    n = (spans.where(F.col("kind") == "node")
-         .select(F.expr(f"try_cast({_field(1)} as bigint)").alias("id"),
-                 F.expr(f"try_cast({_field(2)} as int)").alias("lon"),
-                 F.expr(f"try_cast({_field(3)} as int)").alias("lat"))
-         # same malformed-row filter as decode_nodes, so the derived
-         # tile set is identical to one built from the full table
-         .where(F.col("id").isNotNull() & F.col("lon").isNotNull()
-                & F.col("lat").isNotNull())
-         .drop("id"))
-    return with_point_qt(n, "lon", "lat")
-
-
 def decode_nodes(spans: DataFrame,
                  tags_all: DataFrame | None = None) -> DataFrame:
     """nodes(doc_id, id, lon, lat, tags, quadtree) — quadtree is the

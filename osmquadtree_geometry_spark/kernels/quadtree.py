@@ -316,33 +316,6 @@ def sql_qt_xyz(qt_col: str, d: str | None = None,
 # (validated in tests against the numpy kernel).
 # ---------------------------------------------------------------------------
 
-_SPREAD_MASKS = (
-    (16, 281470681808895),      # 0x0000FFFF0000FFFF
-    (8, 71777214294589695),     # 0x00FF00FF00FF00FF
-    (4, 1085102592571150095),   # 0x0F0F0F0F0F0F0F0F
-    (2, 3689348814741910323),   # 0x3333333333333333
-    (1, 6148914691236517205),   # 0x5555555555555555
-)
-
-
-def _sql_spread_bits(col: str) -> str:
-    """Spread an 18-bit int so its bits occupy even positions
-    (classic morton bit-twiddle, 64-bit masks).
-
-    TEXTUAL composition: each level's string embeds the previous level
-    TWICE, so the full expression duplicates the input subtree 2^5 =
-    32x.  Fine for the DuckDB oracle dialect; in Spark hot paths use
-    :func:`_stage_spread_bits` instead — after an ``explode`` the
-    whole-stage-codegen consume method cannot be split, and this
-    expression inlined there blows the JVM's 64KB method limit (janino
-    InternalCompilerException -> a multi-second failed compile repaid
-    on EVERY action, then interpreted fallback; round-6 measurement)."""
-    c = f"cast({col} as bigint)"
-    for sh, mask in _SPREAD_MASKS:
-        c = f"(({c} | shiftleft({c}, {sh})) & {mask})"
-    return c
-
-
 def _spread9_values() -> list[int]:
     """spread9[i] = the 9 bits of i moved to even bit positions."""
     out = []
@@ -363,8 +336,9 @@ def sql_spread_bits_lookup(col: str) -> str:
     512-entry literal array (Spark-side only; the oracle dialect keeps
     the arithmetic form).
 
-    Why a lookup: the bit-twiddle form embeds its input 2^5 = 32x
-    after textual composition, and Catalyst's filter pushdown
+    Why a lookup: the classic five-level shift-and-mask bit-twiddle,
+    composed textually, embeds its input 2^5 = 32x (each level repeats
+    the previous one twice), and Catalyst's filter pushdown
     re-substitutes staged columns into predicates — a predicate on the
     quadtree downstream of an explode then inlines the whole
     duplicated tree into the Generate consume method, which cannot be

@@ -1,20 +1,32 @@
-"""J6 / S5 / S8 — tile dictionary, ancestor allocation, sorted tiled
-output.
+"""J6 / S5 — tile allocation.
 
-Reference semantics:
-  * ``StoreBlocks`` (`process_geometry.rs:41-155`): each feature goes
-    to the DEEPEST registered ancestor of its quadtree; no ancestor ->
-    the "rem" bucket (tile = EMPTY = -1); blocks sorted by id.
-  * sorted-PBF writer (`tempfile.rs:196-332`): global regroup by tile
-    then sort — in Spark this is ``repartitionByRange(tile)`` +
-    ``sortWithinPartitions`` and the external shuffle replaces the
-    temp-file spill machinery.
+Reference semantics: ``StoreBlocks`` (`process_geometry.rs:41-155`)
+puts each feature in the DEEPEST registered ancestor of its quadtree;
+no ancestor -> the "rem" bucket (tile = EMPTY = -1).  The registered
+set is the depth-``g`` round of every node's point cell.
 
-Allocation strategies (both JVM-side):
-  * small dictionary (<= ~10k tiles): a literal map + coalesce over
-    the 19 possible ancestor depths — zero shuffle, codegen'd;
-  * large dictionary: explode the feature's ancestor chain (19 rows)
-    and broadcast-join the tile dict, keeping max depth.
+Closed form: ``tile = depth(qt) >= g ? round(qt, g) : -1``, one
+projection with no driver action and no shuffle.  Why it equals the
+registered-set lookup:
+
+  * ``calculate_point``'s tile x is non-decreasing in lon and its tile
+    y is non-increasing in lat; the ±85.0511° latitude clamp and the
+    ``1 - 1e-15`` clip keep both monotone.
+  * A feature's cell is the common ancestor of its bbox corners' point
+    cells (a point feature's cell is its node's own cell).  Every node
+    of the feature lies between those corners, so its tile x and y lie
+    between theirs, and at each depth <= ``depth(qt)`` the node's
+    ancestor is the feature's ancestor.  Minzoom rounding only moves
+    ``qt`` up to an ancestor.
+  * The registered set held exactly the depth-``g`` rounds of all node
+    cells.  For ``depth(qt) >= g`` the feature's own nodes registered
+    its depth-``g`` ancestor, and no deeper entry existed; for
+    ``depth(qt) < g`` nothing was registered at or above ``qt``.
+
+The argument needs node cells (JVM ``with_point_qt``) and feature
+cells (JVM ``with_bbox_qt``, numpy ``calculate_bbox`` for
+multipolygons) to come from the same point-cell function; both are
+tested, as is the old lookup against this form.
 """
 
 from __future__ import annotations
@@ -25,48 +37,9 @@ from pyspark.sql import functions as F
 from ..kernels.quadtree import sql_qt_depth, sql_round_qt
 
 
-def tile_dictionary(features: DataFrame, group_depth: int = 8,
-                    qt_col: str = "quadtree") -> list[int]:
-    """Registered tile set: distinct feature cells rounded to
-    ``group_depth`` (the reference gets this from the input block
-    structure; we derive it from the data)."""
-    d = (features
-         .select(F.expr(sql_round_qt(qt_col, str(group_depth))).alias("tile"))
-         .where(F.col("tile") >= 0).distinct())
-    return sorted(r.tile for r in d.collect())
-
-
-def allocate_tiles(df: DataFrame, tiles: list[int],
-                   qt_col: str = "quadtree") -> DataFrame:
-    """Adds ``tile``: deepest registered ancestor of ``qt_col``, -1
-    when none ('rem' bucket)."""
-    if len(tiles) <= 10000:
-        # one map lookup per DISTINCT depth present in the dictionary
-        # (usually 1) — keeps the generated code inside the JVM's
-        # 64KB method limit instead of 19 coalesce arms
-        depths = sorted({t & 31 for t in tiles if t >= 0}, reverse=True)
-        m = f"map({', '.join(f'{t}L, {t}L' for t in tiles)})" if tiles else "map(-1L, -1L)"
-        lookups = [f"{m}[{sql_round_qt(qt_col, str(d))}]" for d in depths]
-        expr = f"coalesce({', '.join(lookups + ['-1L'])})"
-        return df.withColumn("tile", F.expr(expr))
-    spark = df.sparkSession
-    tdf = spark.createDataFrame([(t,) for t in tiles], "tile long")
-    anc = df.withColumn(
-        "anc",
-        F.expr(f"transform(sequence({sql_qt_depth(qt_col)}, 0, -1), "
-               f"d -> {sql_round_qt(qt_col, 'd')})"))
-    e = anc.select("*", F.explode("anc").alias("tile")).drop("anc")
-    j = e.join(F.broadcast(tdf), "tile")
-    key = [c for c in ("doc_id", "id") if c in df.columns]
-    best = (j.groupBy(*key)
-            .agg(F.expr(f"max_by(tile, {sql_qt_depth('tile')})").alias("tile")))
-    return df.join(best, key, "left").fillna({"tile": -1})
-
-
-def write_sorted_tiles(df: DataFrame, out_path: str,
-                       tile_col: str = "tile") -> None:
-    """S8: globally tile-sorted output, id-sorted within tile
-    (format-neutral via the tableio seam)."""
-    from ..tableio import write_table
-    write_table(df.repartitionByRange(tile_col, "id")
-                .sortWithinPartitions(tile_col, "id"), out_path)
+def allocate_tiles(df: DataFrame, group_depth: int = 8) -> DataFrame:
+    """Adds ``tile``: the ``group_depth`` ancestor of ``quadtree``, -1
+    when the cell is shallower ('rem' bucket)."""
+    return df.withColumn("tile", F.expr(
+        f"case when {sql_qt_depth('quadtree')} >= {group_depth} "
+        f"then {sql_round_qt('quadtree', str(group_depth))} else -1L end"))

@@ -34,10 +34,16 @@ from .operators.minzoom import find_minzoom, find_minzoom_fused
 from .operators.multipolygons import process_multipolygons
 from .operators.parenttags import add_parent_tags
 from .operators.relationtags import add_relation_tags
-from .operators.tiles import allocate_tiles, tile_dictionary
+from .operators.tiles import allocate_tiles
 from .operators.waynodes import collect_way_nodes
 
 EMPTY_ERRORS = "elem_type string, elem_id long, message string"
+EMPTY_CPOLYS = (
+    "doc_id string, id long, tags map<string,string>, "
+    "parts array<struct<exterior:array<struct<lon:int,lat:int>>,"
+    "interiors:array<array<struct<lon:int,lat:int>>>,area:double>>, "
+    "area double, z_order long, layer long, minzoom long, "
+    "quadtree long, wkb binary")
 
 
 @dataclass
@@ -60,7 +66,6 @@ class PipelineResult:
 def run_pipeline(spark: SparkSession, docs_path: str | None = None,
                  style: GeometryStyle | None = None,
                  minzoom: MinZoomSpec | None = None,
-                 with_tiles: bool = True,
                  tile_group_depth: int = 8,
                  persist: bool = True,
                  end_date: int | None = None,
@@ -73,8 +78,8 @@ def run_pipeline(spark: SparkSession, docs_path: str | None = None,
         # the join) — the 100 TB layout, where raw-docs parsing never
         # runs inside the query job
         return _run_pipeline_bucketed(
-            spark, bucketed_prefix, style, minzoom, with_tiles,
-            tile_group_depth, end_date)
+            spark, bucketed_prefix, style, minzoom, tile_group_depth,
+            end_date)
     t = decode_all(read_docs(spark, docs_path))
     # persist policy: True = everything (the round-1 default), False =
     # nothing (fastest on a DRAM-bound single box — see
@@ -110,8 +115,8 @@ def run_pipeline(spark: SparkSession, docs_path: str | None = None,
     nodes, ways, relations = t["nodes"], t["ways"], t["relations"]
     if "decode" in pset:
         # the decoded tables feed several downstream branches (points +
-        # way join + relation joins + tile dictionary); persisting here
-        # prevents each output from re-running the decode shuffles
+        # way join + relation joins); persisting here prevents each
+        # output from re-running the decode shuffles
         nodes = cache.persist(nodes)
         ways = cache.persist(ways)
         relations = cache.persist(relations)
@@ -123,14 +128,14 @@ def run_pipeline(spark: SparkSession, docs_path: str | None = None,
     ways_ll, err_w = collect_way_nodes(ways, nodes,
                                        persist_shared="ways_ll" in pset)
     return _finish_pipeline(spark, t, nodes, relations, ways_ll, err_w,
-                            style, minzoom, with_tiles, tile_group_depth,
+                            style, minzoom, tile_group_depth,
                             "ways_ll" in pset, end_date)
 
 
 def _run_pipeline_bucketed(spark: SparkSession, prefix: str,
                            style: GeometryStyle,
                            minzoom: MinZoomSpec | None,
-                           with_tiles: bool, tile_group_depth: int,
+                           tile_group_depth: int,
                            end_date: int | None) -> PipelineResult:
     """Pipeline body over the prepare_bucketed ingest tables — same
     operator chain, the decode stage replaced by bucketed scans."""
@@ -142,14 +147,14 @@ def _run_pipeline_bucketed(spark: SparkSession, prefix: str,
     }
     ways_ll, err_w = collect_way_nodes_bucketed(spark, prefix)
     return _finish_pipeline(spark, t, t["nodes"], t["relations"], ways_ll,
-                            err_w, style, minzoom, with_tiles,
-                            tile_group_depth, False, end_date)
+                            err_w, style, minzoom, tile_group_depth,
+                            False, end_date)
 
 
 def _finish_pipeline(spark: SparkSession, t: dict, nodes: DataFrame,
                      relations: DataFrame, ways_ll: DataFrame,
                      err_w: DataFrame, style: GeometryStyle,
-                     minzoom: MinZoomSpec | None, with_tiles: bool,
+                     minzoom: MinZoomSpec | None,
                      tile_group_depth: int, persist: bool,
                      end_date: int | None) -> PipelineResult:
     if style.parent_tags:
@@ -164,12 +169,7 @@ def _finish_pipeline(spark: SparkSession, t: dict, nodes: DataFrame,
     if style.multipolygons:
         cpolys, err_r = process_multipolygons(relations, ways_ll, style)
     else:
-        cpolys = spark.createDataFrame(
-            [], "doc_id string, id long, tags map<string,string>, "
-                "parts array<struct<exterior:array<struct<lon:int,lat:int>>,"
-                "interiors:array<array<struct<lon:int,lat:int>>>,area:double>>, "
-                "area double, z_order long, layer long, minzoom long, "
-                "quadtree long, wkb binary")
+        cpolys = spark.createDataFrame([], EMPTY_CPOLYS)
         err_r = spark.createDataFrame([], EMPTY_ERRORS)
 
     points = make_points(nodes, style)
@@ -186,21 +186,12 @@ def _finish_pipeline(spark: SparkSession, t: dict, nodes: DataFrame,
                            drop)
         way_feats = find_minzoom_fused(way_feats, minzoom)
 
-    if with_tiles:
-        # registered tile set from ALL node locations (the reference's
-        # tile set comes from the input block structure, i.e. the full
-        # data distribution — not just emitted features).  This is a
-        # bounded driver collect (<= 4^depth values) executed at build
-        # time; it reads the MINIMAL location projection when spans
-        # are available (skips the tag shuffle a full decode_nodes
-        # pays), else the prepared nodes table.
-        from .decode import decode_node_locations
-        dict_src = (decode_node_locations(t["spans"])
-                    if "spans" in t else t["nodes"])
-        tiles = tile_dictionary(dict_src, tile_group_depth)
-        points = allocate_tiles(points, tiles)
-        way_feats = allocate_tiles(way_feats, tiles)
-        cpolys = allocate_tiles(cpolys, tiles)
+    # tile = the feature cell's group-depth ancestor, -1 when shallower:
+    # a projection equal to the reference's deepest-registered-ancestor
+    # lookup (proof in operators/tiles.py)
+    points = allocate_tiles(points, tile_group_depth)
+    way_feats = allocate_tiles(way_feats, tile_group_depth)
+    cpolys = allocate_tiles(cpolys, tile_group_depth)
 
     if end_date is not None:
         # block-level snapshot timestamp carried on every feature
@@ -506,7 +497,7 @@ def run_pipeline_checkpointed(spark: SparkSession, docs_path: str,
         err_r = stage("multipolygon_errors",
                       lambda: process_multipolygons(relations, ways2, style)[1])
     else:
-        cpolys = spark.createDataFrame([], "doc_id string, id long")
+        cpolys = spark.createDataFrame([], EMPTY_CPOLYS)
         err_r = spark.createDataFrame([], EMPTY_ERRORS)
 
     points = stage("points", lambda: make_points(nodes2, style))
@@ -530,11 +521,12 @@ def run_pipeline_checkpointed(spark: SparkSession, docs_path: str,
         cpolys = stage("minzoom_complicated_polygons", lambda: _apply_mz(
             c0, minzoom.sql_polygon_minzoom("tags", "area"), drop))
 
-    tiles = tile_dictionary(nodes, tile_group_depth)
-    points = stage("tiles_points", lambda: allocate_tiles(points, tiles))
+    points = stage("tiles_points",
+                   lambda: allocate_tiles(points, tile_group_depth))
     way_feats = stage("tiles_way_features",
-                      lambda: allocate_tiles(way_feats, tiles))
-    cpolys = stage("tiles_complicated_polygons", lambda: allocate_tiles(cpolys, tiles))
+                      lambda: allocate_tiles(way_feats, tile_group_depth))
+    cpolys = stage("tiles_complicated_polygons",
+                   lambda: allocate_tiles(cpolys, tile_group_depth))
 
     if end_date is not None:
         # stamped on the RETURNED frames (`geometry_block.rs:39`); the

@@ -173,7 +173,7 @@ def geojson_tile_blocks(df: DataFrame, geom_type: str) -> DataFrame:
     """S6 per-tile variant (`process_geometry.rs:343-388`,
     write_geojson_tiles): one FeatureCollection JSON per tile,
     features id-sorted within the block.  One shuffle keyed by tile;
-    block size is bounded by the tile dictionary's grouping depth
+    block size is bounded by the tile grouping depth
     (the same bound the reference's per-tile files have)."""
     df = _with_qt_xyz(df)
     for c in ("layer", "z_order", "minzoom"):

@@ -61,8 +61,8 @@ def main():
         allc.collect()
         t_exec = time.monotonic() - t1
         cache.release_all()
-        print(f"[{tag}] plan_build={t_plan:.2f}s (incl tile_dictionary "
-              f"collect) exec={t_exec:.2f}s jobs_delta={jobs() - j0}")
+        print(f"[{tag}] plan_build={t_plan:.2f}s exec={t_exec:.2f}s "
+              f"jobs_delta={jobs() - j0}")
         return res
 
     # phase-level timing on a fresh build, piece by piece
@@ -81,7 +81,7 @@ def main():
     t0 = time.monotonic()
     res = run_pipeline(spark, docs_path, minzoom=MinZoomSpec.default(),
                        persist=False)
-    print(f"plan build (incl tile dict): {time.monotonic() - t0:.2f}s")
+    print(f"plan build: {time.monotonic() - t0:.2f}s")
     timed_count("points", res.points)
     timed_count("way_features", res.way_features)
     timed_count("cpolys", res.complicated_polygons)

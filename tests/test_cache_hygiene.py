@@ -92,7 +92,6 @@ def test_pipeline_persist_validation(spark, docs_path):
     with pytest.raises(ValueError):
         run_pipeline(spark, docs_path, persist="decoded")
     # valid comma-set still accepted
-    res = run_pipeline(spark, docs_path, persist="ways_ll",
-                       with_tiles=False)
+    res = run_pipeline(spark, docs_path, persist="ways_ll")
     assert res.points is not None
     cache.release_all()

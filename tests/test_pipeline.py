@@ -161,6 +161,81 @@ def test_tile_allocation(result):
             assert int(qt.depth(np.asarray([r.tile]))[0]) <= 8
 
 
+def _depth8_edge_points():
+    """(lon, lat) rows on and +-3 units around every depth-8 cell edge,
+    and around the +-85.0511 degree latitude clamp."""
+    steps = np.arange(257)
+    lon_e = steps * 14_062_500 - 1_800_000_000
+    lat_e = np.round(np.degrees(np.arctan(np.sinh(
+        np.pi * (1 - 2 * steps / 256)))) * 1e7).astype(np.int64)
+    clamp = np.asarray([850_511_287, 850_511_288, 900_000_000])
+    off = np.arange(-3, 4)
+    lon = (lon_e[:, None] + off).ravel()
+    lat = np.concatenate([(lat_e[:, None] + off).ravel(),
+                          (clamp[:, None] + off).ravel(),
+                          (-clamp[:, None] + off).ravel()])
+    # every lon edge point paired with a lat edge point and vice versa
+    return (np.concatenate([lon, np.resize(lon[::-1], len(lat))]),
+            np.concatenate([np.resize(lat, len(lon)), lat]))
+
+
+def test_jvm_cells_match_numpy_at_cell_edges(spark):
+    """Node cells (JVM ``with_point_qt``), way cells (JVM
+    ``with_bbox_qt``) and multipolygon cells (numpy ``calculate_bbox``)
+    must come from one point-cell function for the closed-form tile
+    (operators/tiles.py) to equal the registered-ancestor lookup."""
+    import pandas as pd
+    from osmquadtree_geometry_spark.kernels import quadtree as qt
+    lon, lat = _depth8_edge_points()
+    rng = np.random.default_rng(11)
+    j = rng.permutation(len(lon))
+    # bboxes between a point and a neighbour (cell-edge straddles) and
+    # between a point and a random other (shallow cells)
+    k = np.minimum(np.arange(len(lon)) + 7, len(lon) - 1)
+    other = np.where(np.arange(len(lon)) % 2 == 0, k, j)
+    pdf = pd.DataFrame({
+        "lon": lon.astype(np.int32), "lat": lat.astype(np.int32),
+        "minlon": np.minimum(lon, lon[other]).astype(np.int32),
+        "minlat": np.minimum(lat, lat[other]).astype(np.int32),
+        "maxlon": np.maximum(lon, lon[other]).astype(np.int32),
+        "maxlat": np.maximum(lat, lat[other]).astype(np.int32)})
+    df = spark.createDataFrame(pdf)
+    df = qt.with_point_qt(df, "lon", "lat", "pq")
+    df = qt.with_bbox_qt(df, "minlon", "minlat", "maxlon", "maxlat", "bq")
+    got = df.toPandas()
+    exp_p = qt.calculate_point(got["lon"].to_numpy(np.int64),
+                               got["lat"].to_numpy(np.int64))
+    exp_b = qt.calculate_bbox(*(got[c].to_numpy(np.int64) for c in
+                                ("minlon", "minlat", "maxlon", "maxlat")))
+    assert len(got) > 3500
+    assert (got["pq"].to_numpy() == exp_p).all()
+    assert (got["bq"].to_numpy() == exp_b).all()
+
+
+@pytest.mark.parametrize("persist", [False, True])
+def test_pipeline_construction_starts_no_jobs(spark, docs_path, persist):
+    """Building the pipeline plan costs no Spark job beyond the docs
+    scan's own schema read: tile allocation is a projection."""
+    from osmquadtree_geometry_spark import cache
+    from osmquadtree_geometry_spark.decode import read_docs
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group, build):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    base = jobs(f"read_docs_{persist}", lambda: read_docs(spark, docs_path))
+    built = jobs(f"run_pipeline_{persist}",
+                 lambda: run_pipeline(spark, docs_path, persist=persist))
+    cache.release_all()
+    assert built <= base, (built, base)
+
+
 def test_skew_scene_mega_relation(result):
     # doc 10 (scene_skew): 48-way ring assembles into one polygon
     row = result.complicated_polygons.where(F.col("id") == 10900).first()

@@ -1,7 +1,7 @@
 """Physical-plan assertions: the optimizations we rely on at 100TB
 must actually appear in the plans Catalyst produces (predicate
 pushdown to parquet, broadcast joins for small dims, shuffle-free
-map-literal tile allocation, whole-stage codegen in the hot path)."""
+tile allocation, whole-stage codegen in the hot path)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -48,16 +48,12 @@ def test_broadcast_join_small_dim(spark):
 
 
 def test_tile_alloc_no_shuffle(spark):
-    """Small-dictionary tile allocation is a pure projection — no
-    Exchange in the plan (zero shuffle at any scale)."""
-    import numpy as np
-    from osmquadtree_geometry_spark.kernels import quadtree as qtk
+    """Tile allocation is a pure projection — no Exchange in the plan
+    (zero shuffle at any scale)."""
     from osmquadtree_geometry_spark.operators.tiles import allocate_tiles
-    tiles = [int(qtk.from_tile(np.asarray([x]), np.asarray([y]), 8)[0])
-             for x in range(3) for y in range(3)]
     df = spark.range(0, 1000).select(
         F.col("id"), (F.col("id") * 1000 + 18).alias("quadtree"))
-    out = allocate_tiles(df, tiles)
+    out = allocate_tiles(df, 8)
     plan = _plan(out)
     assert "Exchange" not in plan
     assert "tile" in out.columns
@@ -88,7 +84,7 @@ def test_knn_plan_is_equi_join(spark, docs_path):
     CartesianProduct."""
     from osmquadtree_geometry_spark.pipeline import run_pipeline
     from osmquadtree_geometry_spark.spatial.joins import knn_join, raster_vector_join
-    res = run_pipeline(spark, docs_path, with_tiles=False)
+    res = run_pipeline(spark, docs_path)
     k = knn_join(res.points, res.points, k=3, cell_depth=6, max_rings=1)
     pk = _plan(k)
     assert "CartesianProduct" not in pk

@@ -71,6 +71,69 @@ def test_qt_common_ancestor_law(lon1, lat1, lon2, lat2, d):
 
 
 # ---------------------------------------------------------------------------
+# closed-form tile allocation (S5/J6, operators/tiles.py): a feature's
+# tile is its cell's depth-8 ancestor (-1 when shallower), which must
+# equal the reference's deepest ancestor registered by ANY node's cell
+# ---------------------------------------------------------------------------
+
+_EDGES8 = np.arange(257)
+LON_EDGE8 = (_EDGES8 * 14_062_500 - 1_800_000_000).tolist()
+LAT_EDGE8 = np.round(np.degrees(np.arctan(np.sinh(
+    np.pi * (1 - 2 * _EDGES8 / 256)))) * 1e7).astype(np.int64).tolist()
+CLAMP_LAT = [850_511_287, -850_511_287, 900_000_000, -900_000_000]
+UNIT = st.integers(-1, 1)
+EDGE_LON = st.builds(int.__add__, st.sampled_from(LON_EDGE8), UNIT)
+EDGE_LAT = st.builds(int.__add__, st.sampled_from(LAT_EDGE8 + CLAMP_LAT),
+                     UNIT)
+NODE_LON = st.one_of(EDGE_LON,
+                     st.integers(-1_800_000_000, 1_800_000_000))
+NODE_LAT = st.one_of(EDGE_LAT, st.sampled_from(CLAMP_LAT),
+                     st.integers(-900_000_000, 900_000_000))
+# feature nodes sit around a shared anchor: exactly on it, +-1 unit, or
+# within a fraction of a depth-8 cell (~14M units), so features both
+# straddle cell edges and fit inside one cell
+OFFSET = st.one_of(st.integers(-1, 1), st.integers(-300_000, 300_000))
+
+
+def _old_registered_tile(qt, all_lon, all_lat, g=8):
+    """The allocation being replaced: register the depth-g round of
+    every node's point cell, then take the feature cell's deepest
+    registered ancestor, else -1."""
+    reg = set(qtk.round_qt(qtk.calculate_point(all_lon, all_lat),
+                           np.full(len(all_lon), g)).tolist())
+    if qt < 0:
+        return -1
+    for d in range(int(qtk.depth(np.asarray([qt]))[0]), -1, -1):
+        a = int(qtk.round_qt(np.asarray([qt]), np.asarray([d]))[0])
+        if a in reg:
+            return a
+    return -1
+
+
+@settings(max_examples=300, deadline=None)
+@given(NODE_LON, NODE_LAT,
+       st.lists(st.tuples(OFFSET, OFFSET), min_size=1, max_size=6),
+       st.lists(st.tuples(NODE_LON, NODE_LAT), max_size=20),
+       st.none() | DEPTH)
+def test_closed_form_tile_equals_registered_ancestor(lon0, lat0, offs,
+                                                     background, minzoom):
+    lon = np.asarray([lon0 + a for a, _ in offs], np.int64)
+    lat = np.asarray([lat0 + b for _, b in offs], np.int64)
+    qt = qtk.calculate_bbox(*([v] for v in (lon.min(), lat.min(),
+                                            lon.max(), lat.max())))
+    if minzoom is not None:
+        qt = qtk.round_qt(qt, np.asarray([minzoom]))
+    qt = int(qt[0])
+    bg_lon = np.asarray([p[0] for p in background], np.int64)
+    bg_lat = np.asarray([p[1] for p in background], np.int64)
+    expected = _old_registered_tile(qt, np.concatenate([lon, bg_lon]),
+                                    np.concatenate([lat, bg_lat]))
+    q = np.asarray([qt])
+    closed = int(np.where(qtk.depth(q) >= 8, qtk.round_qt(q, 8), -1)[0])
+    assert closed == expected
+
+
+# ---------------------------------------------------------------------------
 # WKB encode/decode (G12): parse our own bytes back
 # ---------------------------------------------------------------------------
 

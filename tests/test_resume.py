@@ -68,3 +68,15 @@ def test_results_match_uncheckpointed(spark, docs_path, workdir):
         lb = sorted((r.id, r.quadtree, r.tile) for r in
                     b.select("id", "quadtree", "tile").collect())
         assert la == lb
+
+
+def test_checkpointed_without_multipolygons(spark, docs_path, tmp_path):
+    """style.multipolygons=False elides J2: the empty multipolygon
+    frame still carries the quadtree that tile allocation reads."""
+    from osmquadtree_geometry_spark.config.style import GeometryStyle
+    res, _ = run_pipeline_checkpointed(
+        spark, docs_path, str(tmp_path / "ckpt"),
+        style=GeometryStyle(multipolygons=False))
+    assert res.complicated_polygons.count() == 0
+    assert "tile" in res.complicated_polygons.columns
+    assert res.points.where(F.col("tile") >= 0).count() > 0
